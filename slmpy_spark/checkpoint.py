@@ -111,109 +111,6 @@ class Checkpointer:
         with open(f"{self._run_dir}/metrics.jsonl", "a") as f:
             f.write(json.dumps(row) + "\n")
 
-    def log_partition_metrics(self, df: DataFrame, op: str, **ctx) -> int:
-        """Per-partition lineage rows (north star; SURVEY §2.1 metrics
-        schema): runs one mapInPandas pass over `df` that emits, per
-        physical partition, (partition_id, n_rows/edges_processed,
-        wall_ms), and appends them as metrics rows tagged with `op` and
-        any extra context.  Returns the number of partitions seen.
-        The pass is a separate cheap action — call it on a materialized
-        frame, at per-level (not per-sweep) granularity.
-
-        Scale: the table backend appends the stats frame as ONE
-        DataFrame write — the rows never funnel through a driver-side
-        loop, so 10^5–10^6 partitions on a real cluster cost one small
-        distributed append (seq = running base + partition_id keeps the
-        global metrics ordering).  The parquet backend is the hermetic
-        local-file path and collects (its metrics sink IS a driver-side
-        jsonl file), in one buffered write."""
-        import pandas as pd  # noqa: F401  (worker-side import kept local)
-
-        def _stats(batches):
-            from pyspark import TaskContext
-            import time as _t
-
-            t0 = _t.time()
-            n = 0
-            for pdf in batches:
-                n += len(pdf)
-            tc = TaskContext.get()
-            pid = tc.partitionId() if tc is not None else -1
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                {
-                    "partition_id": [pid],
-                    "edges_processed": [n],
-                    "wall_ms": [(_t.time() - t0) * 1000.0],
-                }
-            )
-
-        stats = df.mapInPandas(
-            _stats, "partition_id int, edges_processed long, wall_ms double"
-        )
-        if self.backend == "table":
-            from pyspark.sql import functions as F
-
-            base, ts = self._metrics_seq, time.time()
-            # clamp: the mapInPandas fallback emits partition_id = -1
-            # when TaskContext is absent, and base - 1 would collide
-            # with the previous metric row's seq (metrics() sorts by it)
-            seq = (
-                F.lit(base) + F.greatest(F.col("partition_id"), F.lit(0))
-            ).cast("long")
-            payload = F.to_json(
-                F.struct(
-                    F.lit(self.run_id).alias("run_id"),
-                    F.lit(ts).alias("ts"),
-                    seq.alias("seq"),
-                    F.lit(op).alias("op"),
-                    F.col("partition_id"),
-                    F.col("edges_processed"),
-                    F.col("wall_ms"),
-                    *[F.lit(v).alias(k) for k, v in ctx.items()],
-                )
-            )
-            mdf = stats.select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(ts).alias("ts"),
-                seq.alias("seq"),
-                payload.alias("payload"),
-            ).persist()
-            n = mdf.count()
-            tbl = self._table("metrics")
-            try:
-                mdf.writeTo(tbl).append()
-            except Exception:
-                try:
-                    mdf.write.insertInto(tbl)  # V1 session-catalog fallback
-                except Exception:
-                    mdf.writeTo(tbl).using(self.table_format).create()
-            mdf.unpersist()
-            self._metrics_seq += n
-            return n
-        rows = stats.collect()
-        base, ts = self._metrics_seq, time.time()
-        with open(f"{self._run_dir}/metrics.jsonl", "a") as f:
-            for r in rows:
-                f.write(
-                    json.dumps(
-                        {
-                            "run_id": self.run_id,
-                            "ts": ts,
-                            "seq": base + int(r["partition_id"]),
-                            "op": op,
-                            "partition_id": int(r["partition_id"]),
-                            "edges_processed": int(r["edges_processed"]),
-                            "wall_ms": float(r["wall_ms"]),
-                            **ctx,
-                        }
-                    )
-                    + "\n"
-                )
-        self._metrics_seq += len(rows)
-        return len(rows)
-
     # ---------------------------------------------------------- resume
 
     def latest_step(self, state: str) -> int | None:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import symmetrize, vertices
-from slmpy_spark.util import explain_to, materialize
+from slmpy_spark.util import materialize
 
 
 def connected_components(
@@ -37,8 +37,8 @@ def connected_components(
     """Exact undirected connected components. Returns (id, component).
 
     `leaf_cache=False` skips the checkpoint leaf under the edge cache
-    (saves its fixed block-write job on small inputs — the A/B toggle,
-    BENCH/ab_leaf_small.py)."""
+    (saves its fixed block-write job on small inputs — the A/B toggle;
+    see BENCH/NOTES.md, "Small-scale leaf-cache A/B")."""
     # pre-hash-partitioned on the per-round join key (dst) and cached:
     # the edge table enters this layout once and never exchanges again —
     # only the vertex-sized label table shuffles per round (the same
@@ -47,7 +47,7 @@ def connected_components(
     # per-round CacheManager lookup and AQE replanning canonicalize the
     # cached plan's embedded lineage every round — a leaf keeps that
     # constant-time regardless of the caller's plan depth (measured for
-    # the SLM sweep, BENCH/qe_stage_probe.py).  The leaf outlives the
+    # the SLM sweep, BENCH/NOTES.md).  The leaf outlives the
     # cache (evicted cache partitions recompute from it).
     sym_base = symmetrize(edges).select("src", "dst")
     sym_leaf = materialize(sym_base) if leaf_cache else sym_base
@@ -114,10 +114,8 @@ def connected_components(
                 .alias("changed"),
             )
             .observe(obs, F.sum("changed").alias("ch"))
+            .transform(materialize)
         )
-        if it == 0:
-            explain_to(new_labels, "cc_round")
-        new_labels = new_labels.transform(materialize)
 
         changed = int(obs.get["ch"] or 0)
         labels.unpersist()

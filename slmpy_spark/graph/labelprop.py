@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import symmetrize, vertices
-from slmpy_spark.util import explain_to, materialize
+from slmpy_spark.util import materialize
 
 
 def label_propagation(
@@ -58,12 +58,11 @@ def label_propagation(
         # cheap runtime-broadcast join, the sentinel branch widened the
         # big per-(id,label) exchange instead.)
         obs = Observation()
-        new_labels = lpa_round(sym, labels, None, with_changed=True).observe(
-            obs, F.sum("changed").alias("ch")
+        new_labels = (
+            lpa_round(sym, labels, None, with_changed=True)
+            .observe(obs, F.sum("changed").alias("ch"))
+            .transform(materialize)
         )
-        if it == 0:
-            explain_to(new_labels, "lpa_round")
-        new_labels = new_labels.transform(materialize)
         changed = int(obs.get["ch"] or 0)
         labels.unpersist()
         labels = new_labels

@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from slmpy_spark.util import explain_to, materialize
+from slmpy_spark.util import materialize
 
 
 def pagerank(
@@ -88,7 +88,7 @@ def pagerank(
     checkpoint leaf (constant-time per-iteration planning — the r4
     CacheManager-canonicalization fix, a measured win at ≥10M edges).
     False skips the leaf's fixed checkpoint job — the A/B toggle for
-    small inputs (BENCH/ab_leaf_small.py).
+    small inputs (BENCH/NOTES.md, "Small-scale leaf-cache A/B").
 
     `broadcast_threshold`: when the vertex count fits under it, the
     one-time setup joins take broadcast hints (see module docstring —
@@ -254,8 +254,6 @@ def pagerank(
             "unit",
             "old_rank",
         )
-        if it == 0:
-            explain_to(new_state, "pagerank_iter")
         new_ranks = (
             new_state.observe(
                 obs,

@@ -59,35 +59,17 @@ from pyspark.sql import functions as F
 
 from slmpy_spark.graph import kernels
 from slmpy_spark.graph.aggregate import aggregate_graph
-from slmpy_spark.graph.edges import degrees, symmetrize, total_weight, vertices
+from slmpy_spark.graph.edges import degrees, symmetrize, vertices
 from slmpy_spark.graph.modularity import modularity
-from slmpy_spark.util import explain_to, is_plan_leaf, materialize
+from slmpy_spark.util import is_plan_leaf, materialize
 
 ASSIGN_SCHEMA = "id long, community long"
-
-import os as _os
-import sys as _sys
-import time as _time
 
 #: diagnostics from the most recent slm_scale() run on this driver
 #: (single-threaded driver assumption): actual sweep/level/pass counts,
 #: consumed by bench.py / BENCH/run_scaling.py to compute real
 #: edges-per-sweep throughput instead of assuming max_sweeps ran.
 LAST_RUN_STATS: dict = {"sweeps": 0, "levels": 0, "passes": 0, "edge_entries_swept": 0}
-
-
-def _dbg(msg: str) -> None:
-    if _os.environ.get("SLMPY_DEBUG"):
-        print(f"[slm {_time.strftime('%H:%M:%S')}] {msg}", file=_sys.stderr, flush=True)
-
-
-def _phase(level, name: str, t0: float) -> float:
-    """Emit a parseable non-sweep phase timing line (SLMPY_DEBUG) and
-    return a fresh t0 — BENCH/decompose.py aggregates these to attribute
-    the non-sweep serial floor per phase instead of one opaque bucket."""
-    now = _time.time()
-    _dbg(f"phase level={level} name={name} secs={now - t0:.3f}")
-    return now
 
 
 # ------------------------------------------------------------- helpers
@@ -192,7 +174,7 @@ def _attach_sigma(state: DataFrame, bcast: bool) -> DataFrame:
     return state
 
 
-def _lazy_sigma_state(state: DataFrame, bcast: bool = False) -> DataFrame:
+def _lazy_sigma_state(state: DataFrame) -> DataFrame:
     """(id, community, sigma) view of a *materialized* shuffle-level
     state, deriving sigma on the fly: a partial-combining
     groupBy(community).sum (map-side combine → a hub community's rows
@@ -201,8 +183,8 @@ def _lazy_sigma_state(state: DataFrame, bcast: bool = False) -> DataFrame:
     one-row-per-community side and STREAM the probe partition — a
     sort-merge join would sort the giant community's partition, and a
     window would buffer it, both single-task stragglers at scale.
-    (`bcast=True` broadcast-joins the tiny side instead — used only by
-    tests/probes; the sweep's bcast levels carry sigma on the state.)
+    (Bcast levels never come here: they carry sigma on the state, see
+    _attach_sigma.)
 
     The sweep references this frame exactly twice (the dst-side
     candidate projection and the zero-weight self rows), both pruned to
@@ -212,8 +194,7 @@ def _lazy_sigma_state(state: DataFrame, bcast: bool = False) -> DataFrame:
     leaf: re-scanning it is reading checkpoint blocks, not recomputing
     a plan."""
     sig = state.groupBy("community").agg(F.sum("node_w").alias("sigma"))
-    sig = F.broadcast(sig) if bcast else sig.hint("shuffle_hash")
-    return state.select("id", "community").join(sig, "community")
+    return state.select("id", "community").join(sig.hint("shuffle_hash"), "community")
 
 
 def _propose_moves(
@@ -227,11 +208,13 @@ def _propose_moves(
 ) -> DataFrame:
     """One synchronous local-moving sweep, entirely JVM-side.
 
-    `state`: (id, community, node_w) — the current assignment with node
-    weights; the community Σtot is derived lazily from the materialized
-    state leaf per sweep in both modes (_lazy_sigma_state — cheap block
-    re-scan, skew-safe partial-combine aggregation, no giant-community
-    window; broadcast-joined back at bcast levels).
+    `state`: (id, community, node_w[, sigma]) — the current assignment
+    with node weights.  The community Σtot source depends on the mode
+    (see _attach_sigma): at bcast levels it rides the state as a
+    `sigma` column maintained by a window sum; at shuffle levels it is
+    derived lazily from the materialized state leaf per sweep
+    (_lazy_sigma_state — cheap block re-scan, skew-safe partial-combine
+    aggregation, no giant-community window).
 
     Semantics (mirrors kernels.local_moving against a snapshot):
     for every eligible vertex i with candidates C = {communities of
@@ -424,13 +407,9 @@ def _assign_quality(
         .agg(F.sum(F.col("sigma") * F.col("sigma")).alias("s2"))
     )
     row = intra_df.crossJoin(s2_df).first()
-    intra = float(row["intra"] or 0.0)
-    s2 = float(row["s2"] or 0.0)
-    if two_m == 0:
-        return 0.0
-    if quality == "cpm":
-        return (intra - gamma * s2) / two_m
-    return intra / two_m - gamma * s2 / (two_m * two_m)
+    return _q_of(
+        float(row["intra"] or 0.0), float(row["s2"] or 0.0), two_m, gamma, quality
+    )
 
 
 def _distributed_local_moving(
@@ -486,7 +465,6 @@ def _distributed_local_moving(
     action inside `materialize`, see util.materialize) — no separate
     stats aggregation job.  Rejection wastes exactly one speculative
     decision job (same cost as the old retry)."""
-    tp = _time.time()
     if not bcast and not pre_partitioned:
         # huge-vertex-table path: pre-hash-partition the edge table by
         # dst ONCE and persist — every sweep's first join (dst →
@@ -507,7 +485,6 @@ def _distributed_local_moving(
         ).persist()
         sym.count()
         owned_sym = sym
-        tp = _phase(level, "lm_edge_cache", tp)
     else:
         owned_leaf = None
         owned_sym = None
@@ -529,7 +506,6 @@ def _distributed_local_moving(
             bcast,
         )
     state = materialize(state0)
-    tp = _phase(level, "lm_state_init", tp)
     best_state = state
     best_q = None
     move_frac = init_frac
@@ -547,13 +523,7 @@ def _distributed_local_moving(
     # from sweep ~8 onward.
 
     for sweep in range(max_sweeps):
-        t0 = _time.time()
         obs = Observation()
-        if sweep == 0:
-            explain_to(
-                _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast),
-                f"slm_sweep_{'bcast' if bcast else 'shuffle'}",
-            )
         prop = (
             _propose_moves(sym, state, resolution2, seed, sweep, move_frac, bcast)
             .observe(
@@ -564,7 +534,6 @@ def _distributed_local_moving(
             )
             .transform(materialize)
         )
-        t1 = _time.time()
         LAST_RUN_STATS["sweeps"] += 1
         LAST_RUN_STATS["edge_entries_swept"] += m_l
         # pre-sweep state's Q + this sweep's move count, observed on the
@@ -575,11 +544,6 @@ def _distributed_local_moving(
             two_m, gamma, quality,
         )
         n_moves = int(vals["moves"] or 0)
-        _dbg(
-            f"level {level} sweep {sweep} frac={move_frac} "
-            f"q(pre)={q_prev:.6f} moves={n_moves} "
-            f"job={t1 - t0:.1f}s"
-        )
         if checkpointer is not None:
             checkpointer.log_metric(
                 op="slm_sweep", level=level, sweep=sweep, q=q_prev,
@@ -625,22 +589,18 @@ def _distributed_local_moving(
         state = prop
         pending = True
 
-    tp = _time.time()
     if pending and q_guard:
         # last adopted proposal was never revealed by a later sweep —
         # evaluate it once; keep it only if it beats the best
         q_final = _assign_quality(sym, state, two_m, gamma, quality, bcast=bcast)
-        _dbg(f"level {level} final-eval q={q_final:.6f} (best {best_q:.6f})")
         if best_q is None or q_final > best_q + 1e-12:
             best_state = state
-        tp = _phase(level, "lm_final_eval", tp)
     elif pending:
         best_state = state
 
     assign_out = _canonical_labels(
         best_state.select("id", "community"), bcast=bcast
     ).transform(materialize)
-    tp = _phase(level, "lm_canonical", tp)
     if state is not best_state:
         state.unpersist()
     best_state.unpersist()
@@ -709,7 +669,6 @@ def _split_communities(
     two_m: float = 0.0,
     max_sweeps: int = 8,
     giant_threshold: int = 1_000_000,
-    level: int = -1,
 ) -> DataFrame:
     """Re-cluster every community from singletons (may split it).
     New community labels = min member vertex id per subcommunity.
@@ -744,7 +703,6 @@ def _split_communities(
             F.col("node_w").alias("w_src"),
         )
     )
-    tp = _time.time()
     intra = (
         sym.join(a_dst, "dst")
         .join(src_side, "src")
@@ -760,12 +718,7 @@ def _split_communities(
     )
     top = int(top_row["m"] or 0)
     intra_count = int(top_row["tot"] or 0)
-    tp = _phase(level, "split_intra", tp)
 
-    if top > giant_threshold:
-        _dbg(f"split: giant community ({top} intra rows) → distributed split")
-    else:
-        _dbg(f"split: top community {top} intra rows (≤ {giant_threshold}) → kernel split")
     if top > giant_threshold:
         out = _distributed_local_moving(
             intra.select("src", "dst", "weight"), node_w, None,
@@ -773,8 +726,7 @@ def _split_communities(
             True, two_m, bcast=bcast, m_l=intra_count,
         )
         # labels are already canonical min-member ids; vertices with no
-        # intra edges kept their singleton id — the kernel semantics
-        tp = _phase(level, "split_distributed", tp)
+        # intra edges kept their singleton id — the kernel semantics.
         # parent map (subcommunity → step-a parent community) — the SLM
         # §1.2(4c) warm start for the next level's initial clustering.
         # Materialized HERE, before the caller unpersists `assign` (the
@@ -815,7 +767,6 @@ def _split_communities(
         # caller's unpersist must free the leaf's blocks (same
         # monkey-patch convention as util.materialize)
         out.unpersist = out_full.unpersist  # type: ignore[method-assign]
-        tp = _phase(level, "split_kernel", tp)
         parent_map = (
             out_full.select(
                 F.col("community").alias("id"), F.col("parent").alias("community")
@@ -823,7 +774,6 @@ def _split_communities(
             .distinct()
             .transform(materialize)
         )
-    tp = _phase(level, "split_parent_map", tp)
     intra.unpersist()
     return out, parent_map
 
@@ -838,7 +788,6 @@ def slm_scale(
     seed: int = 0,
     max_levels: int = 12,
     max_sweeps: int = 12,
-    n_parts: int | None = None,
     exact_threshold: int = 200_000,
     q_guard: bool = True,
     checkpointer=None,
@@ -863,10 +812,6 @@ def slm_scale(
     argmax-Q assignment over all starts/passes is returned (mirrors
     exact mode's best-of-N restarts).
 
-    `n_parts` is accepted for API compatibility but unused: the sweep
-    is a Catalyst aggregation whose parallelism follows
-    spark.sql.shuffle.partitions / AQE, not a manual partition count.
-
     `broadcast_threshold`: levels whose vertex count fits under it run
     every vertex-side join map-side (broadcast) — the edge table is
     scanned without shuffling during sweeps.
@@ -879,7 +824,6 @@ def slm_scale(
     start.  Per-level seeds are `seed + level`, so the remaining
     levels replay as the uninterrupted run would (modulo sweeps'
     snapshot timing)."""
-    spark = edges.sparkSession
     LAST_RUN_STATS.update(sweeps=0, levels=0, passes=0, edge_entries_swept=0)
 
     # materialize (checkpoint leaf), NOT persist: every level-0 sweep's
@@ -887,15 +831,14 @@ def slm_scale(
     # CacheManager.useCachedData + AQE replanning canonicalize those
     # embedded trees per sweep — measured ~1.0s/sweep of driver-side
     # 'optimization' phase against ~26ms of actual rule execution when
-    # sym0 carries the caller's full lineage (BENCH/qe_stage_probe.py:
-    # 1.06s → 0.085s with a leaf).  A leaf costs one checkpoint job up
-    # front (same price as persist+count) and collapses every
-    # downstream cache's embedded plan to scan-over-LogicalRDD.
+    # sym0 carries the caller's full lineage (1.06s → 0.085s per sweep
+    # with a leaf).  A leaf costs one checkpoint job up front (same
+    # price as persist+count) and collapses every downstream cache's
+    # embedded plan to scan-over-LogicalRDD.
     # The edge-entry count and 2m ride the checkpoint action as observe
     # metrics (weights are integral on web link graphs, so the sum is
     # exact regardless of accumulation order) — no separate count /
     # total_weight jobs.
-    tp = _time.time()
     obs0 = Observation()
     sym0 = materialize(
         symmetrize(edges).observe(
@@ -916,7 +859,6 @@ def slm_scale(
         nw0 = degrees(sym0).select("id", F.col("w_deg").alias("node_w"))
     nw0 = materialize(nw0.observe(obs_n, F.count(F.lit(1)).alias("n")))
     nv0 = int(obs_n.get["n"] or 0)
-    tp = _phase(-1, "setup", tp)
 
     best_q = None
     best_flat = None
@@ -943,7 +885,6 @@ def slm_scale(
                 # multilevel refinement (§1.2(3)): one more LM pass on
                 # the ORIGINAL graph from the merged-down labels; the
                 # guard keeps it monotone, so the pass can only improve Q
-                nv0 = nw0.count()
                 pre_refine = flat
                 flat = _distributed_local_moving(
                     sym0, nw0, flat, resolution2, pass_seed + max_levels,
@@ -962,10 +903,7 @@ def slm_scale(
                     and pre_refine is not flat
                 ):
                     pre_refine.unpersist()
-            tq = _time.time()
             q = modularity(sym0, flat, gamma=gamma, quality=quality, two_m=two_m)
-            tq = _phase(-1, "pass_q", tq)
-            _dbg(f"start {start} pass {it}: q={q:.6f} (best {best_q})")
             old_best = best_flat
             if best_q is None or q > best_q + 1e-9:
                 best_q, best_flat = q, flat
@@ -1031,11 +969,8 @@ def _scale_pass(
             nv_known = None
 
     for level in range(level_start, max_levels):
-        tl = _time.time()
         m_l = m_known if m_known is not None else sym_l.count()
-        _dbg(f"level {level}: m={m_l}")
         if m_l <= exact_threshold:
-            _dbg(f"level {level}: exact finish (m={m_l})")
             warm = assign_l
             assign_l = _exact_finish(
                 sym_l,
@@ -1046,9 +981,7 @@ def _scale_pass(
                 resolution2,
                 seed + level,
                 variant,
-                level=level,
             )
-            tl = _phase(level, "exact_finish", tl)
             # _exact_finish returns its INPUT unchanged when the level's
             # supergraph is empty (every community absorbed all its
             # edges → aggregate dropped them as self-loops): freeing
@@ -1058,7 +991,6 @@ def _scale_pass(
             # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
             if warm is not None and warm is not init_flat and warm is not assign_l:
                 warm.unpersist()
-            _dbg(f"level {level}: exact finish done")
             prev_flat = flat
             flat = (
                 assign_l
@@ -1083,7 +1015,6 @@ def _scale_pass(
             # into this layout exactly once
             sym_j = sym_l.repartition("dst").persist()
             sym_j.count()
-            tl = _phase(level, "edge_cache", tl)
         else:
             sym_j = sym_l
         warm = assign_l
@@ -1098,23 +1029,13 @@ def _scale_pass(
             # (LM materialized its own state) — free its blocks; never
             # touches the caller's init_flat
             warm.unpersist()
-        _dbg(f"level {level}: LM done (bcast={bcast}), splitting")
-        if checkpointer is not None:
-            # per-partition lineage (north star / SURVEY §2.1): which
-            # physical partition processed how many edge entries, how
-            # long — once per level, over the level's input edge table
-            checkpointer.log_partition_metrics(
-                sym_j, op="slm_lm_input", level=level, step=step_offset + level
-            )
         parent_map = None
-        tl = _time.time()
         if variant == "slm":
             lm_out = assign_l
             assign_l, parent_map = _split_communities(
                 sym_j, node_w_l, assign_l, resolution2, seed + level,
                 bcast=bcast, gamma=gamma, quality=quality, two_m=two_m,
                 max_sweeps=max_sweeps, giant_threshold=giant_threshold,
-                level=level,
             )
             lm_out.unpersist()  # split output (materialized) supersedes it
 
@@ -1122,9 +1043,7 @@ def _scale_pass(
         flat = assign_l if flat is None else _merge_down(flat, assign_l, bcast=bcast)
         if prev_flat is not None and prev_flat is not flat:
             prev_flat.unpersist()
-        tl = _phase(level, "merge_down", tl)
 
-        _dbg(f"level {level}: split done, aggregating")
         # next level's node weights double as the convergence check:
         # its row count IS the community count (saves the separate
         # count-distinct job per level) and rides the materialize action
@@ -1141,7 +1060,6 @@ def _scale_pass(
             .observe(obs_nw, F.count(F.lit(1)).alias("n"))
         )
         n_vertices, n_comms = nv, int(obs_nw.get["n"] or 0)
-        tl = _phase(level, "node_w_next", tl)
         if n_comms >= n_vertices:
             node_w_next.unpersist()
             if parent_map is not None:
@@ -1151,7 +1069,6 @@ def _scale_pass(
             break  # nothing merged at this level → converged
 
         super_edges, _sw = aggregate_graph(sym_j, assign_l, bcast=bcast)
-        explain_to(super_edges, "slm_aggregate")
         old_sym, old_sym_j = sym_l, sym_j
         # next level's edge-entry count rides the aggregation's own
         # checkpoint action (steady-state: zero standalone count jobs
@@ -1162,7 +1079,6 @@ def _scale_pass(
         )
         m_known = int(obs_m.get["m"] or 0)
         nv_known = n_comms
-        tl = _phase(level, "aggregate", tl)
         # the level's (materialized) assignment is now fully consumed —
         # merge-down, node_w_next, and the aggregation above are all
         # materialized over their own blocks — so its checkpoint blocks
@@ -1177,7 +1093,6 @@ def _scale_pass(
         if node_w_l is not nw0:
             node_w_l.unpersist()
         node_w_l = node_w_next
-        _dbg(f"level {level}: aggregated, nv/nc={n_vertices}/{n_comms}")
         # next level's initial clustering: SLM groups subcommunities by
         # their step-a parent (§1.2(4c) warm start, already materialized
         # by the split); Louvain starts from singletons (None)
@@ -1227,10 +1142,9 @@ def _merge_down(
     return out.transform(materialize)
 
 
-def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-1):
+def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant):
     """Collect the (now small) super-graph and run the sequential kernel
     to convergence, starting from the current assignment."""
-    tp = _time.time()
     # ONE tagged-union collect instead of three separate toPandas
     # actions (r6) — the exact finish runs once per pass and each
     # driver action costs a full job submission
@@ -1259,7 +1173,6 @@ def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-
     nw = all_pdf[all_pdf["t"] == 1].rename(columns={"a": "id", "w": "node_w"})
     a = all_pdf[all_pdf["t"] == 2].rename(columns={"a": "id", "b": "community"})
     spark = sym_l.sparkSession
-    tp = _phase(level, "exact_collect", tp)
     if pdf.empty:
         return assign_l
 
@@ -1297,13 +1210,11 @@ def _exact_finish(sym_l, node_w_l, assign_l, resolution2, seed, variant, level=-
     for _ in range(32):
         if not step(indptr, nbr, wgt, node_w, cluster, resolution2, rng):
             break
-    tp = _phase(level, "exact_kernel", tp)
     out = pd.DataFrame({"id": ids, "community": cluster})
     # canonical min-member-id labels to stay in the global convention
     rep = out.groupby("community")["id"].transform("min")
     out["community"] = rep
     res = spark.createDataFrame(out[["id", "community"]], ASSIGN_SCHEMA)
-    tp = _phase(level, "exact_emit", tp)
     return res
 
 

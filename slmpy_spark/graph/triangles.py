@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slmpy_spark.graph.edges import symmetrize
-from slmpy_spark.util import explain_to
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -62,9 +61,7 @@ def triangles(edges: DataFrame) -> DataFrame:
     )
     wedges = w1.join(w2, (F.col("a") == F.col("a2")) & b_lt_c).select("a", "b", "c")
     closing = o.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    tris = wedges.join(closing, ["b", "c"], "left_semi").select("a", "b", "c")
-    explain_to(tris, "triangles")
-    return tris
+    return wedges.join(closing, ["b", "c"], "left_semi").select("a", "b", "c")
 
 
 def triangle_count(edges: DataFrame):

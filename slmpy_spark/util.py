@@ -2,32 +2,7 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-
-
-def explain_to(df: DataFrame, name: str) -> None:
-    """Debug hook: when $SLMPY_EXPLAIN_DIR is set, dump this frame's
-    .explain("formatted") to <dir>/<name>.txt (first call per name per
-    process wins).  Lets plan audits capture the REAL per-iteration /
-    per-sweep plans the loops execute, instead of reconstructing them
-    by hand.  No-op (one getenv) when the env var is unset."""
-    d = os.environ.get("SLMPY_EXPLAIN_DIR")
-    if not d:
-        return
-    path = os.path.join(d, f"{name}.txt")
-    if os.path.exists(path):
-        return
-    try:
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        os.makedirs(d, exist_ok=True)
-        with open(path, "w") as f:
-            f.write(txt)
-    except Exception:
-        pass
 
 
 def is_plan_leaf(df: DataFrame) -> bool:

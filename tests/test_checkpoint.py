@@ -2,7 +2,6 @@
 metrics, lineage truncation (SURVEY.md S6, §6.2-7)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from slmpy_spark import engine
 from slmpy_spark.checkpoint import Checkpointer
@@ -108,33 +107,13 @@ def test_incomplete_snapshot_ignored(spark, tmp_path):
     assert ck.load_state("assign").first().id == 1
 
 
-def test_partition_metrics(spark, tmp_path):
-    """North-star per-partition lineage: log_partition_metrics emits one
-    (partition_id, edges_processed, wall_ms) row per physical partition,
-    and an SLM scale run records them per level."""
-    ck = Checkpointer(spark, str(tmp_path), run_id="pm")
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 5).alias("v")).repartition(4)
-    n = ck.log_partition_metrics(df, op="probe", level=0)
-    assert n == 4
-    rows = [m for m in ck.metrics() if m["op"] == "probe"]
-    assert sorted(r["partition_id"] for r in rows) == [0, 1, 2, 3]
-    assert sum(r["edges_processed"] for r in rows) == 100
-    assert all(r["wall_ms"] >= 0 for r in rows)
-
-    e = edges_df(spark, G.g_two_cliques())
-    engine.slm(e, checkpointer=ck, seed=1, mode="scale",
-               exact_threshold=0, max_sweeps=3)
-    lm_rows = [m for m in ck.metrics() if m["op"] == "slm_lm_input"]
-    assert lm_rows and all("partition_id" in m for m in lm_rows)
-
-
 def test_slm_scale_checkpoints_resumable(spark, tmp_path):
     """SURVEY §6.2-7: interrupt-and-resume equals the uninterrupted run.
     A resumed run (same run_id) restarts after the last completed level
     and must produce the identical final assignment."""
     und = G.g_two_cliques()
     e = edges_df(spark, und)
-    kw = dict(seed=42, mode="scale", n_parts=2, exact_threshold=0, max_sweeps=4)
+    kw = dict(seed=42, mode="scale", exact_threshold=0, max_sweeps=4)
 
     ck = Checkpointer(spark, str(tmp_path), run_id="slm1")
     assign, q = engine.slm(e, checkpointer=ck, **kw)

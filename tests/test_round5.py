@@ -171,10 +171,16 @@ def test_modularity_two_m_passthrough(spark):
     assert q_passed == q_default
 
 
-def test_split_parent_map_matches_join(spark):
-    """The kernel split path now derives the warm-start parent map from
-    the parent column riding the split output's own materialize — it
-    must equal the r4 join-based derivation (sub → its step-a parent)."""
+@pytest.mark.parametrize(
+    "split_kw", [{}, {"giant_threshold": 0}], ids=["kernel", "distributed"]
+)
+def test_split_parent_map_matches_join(spark, split_kw):
+    """The kernel split path derives the warm-start parent map from the
+    parent column riding the split output's own materialize; the
+    distributed split path (every community counts as giant at
+    ``giant_threshold=0``) joins it back.  Both must equal the join-based
+    derivation (sub → its step-a parent), and the split output must
+    refine the input partition."""
     from slmpy_spark.graph.edges import degrees, symmetrize
     from slmpy_spark.graph.slm import _split_communities
 
@@ -196,19 +202,16 @@ def test_split_parent_map_matches_join(spark):
     )
     two_m = float(sym.agg(F.sum("weight")).first()[0])
     out, parent_map = _split_communities(
-        sym, node_w, assign, resolution2=1.0 / two_m, seed=3, two_m=two_m
+        sym, node_w, assign, resolution2=1.0 / two_m, seed=3, two_m=two_m,
+        **split_kw,
     )
     got = {(r.id, r.community) for r in parent_map.collect()}
-    expect = {
-        (r.community, r.parent)
-        for r in out.join(
-            assign.select("id", F.col("community").alias("parent")), "id"
-        )
-        .select("community", "parent")
-        .distinct()
-        .collect()
-    }
-    assert got == expect
+    rows = out.join(
+        assign.select("id", F.col("community").alias("parent")), "id"
+    ).collect()
+    assert got == {(r.community, r.parent) for r in rows}
+    # refinement: every subcommunity's members share exactly one parent
+    assert len(got) == len({r.community for r in rows})
     # the split actually split: more subcommunities than parents
     assert len({c for c, _ in got}) > 2
     out.unpersist()
